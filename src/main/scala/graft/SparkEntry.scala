@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, MultimodalOps, RelationalOps, Similarity, TextAnalysis}
 import graft.operators.ImporterPipeline._
-import graft.sources.{Fixtures, OracleCtes}
+import graft.sources.{Fixtures, OracleCtes, Tables}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + FIXTURES.md.
   *
@@ -457,25 +457,25 @@ object SparkEntry {
     // (down-weight members instead of dropping them). Only the first
     // reader pays the closure pass — d8 stays graded on it inline.
     "d17_cluster_size_histogram" -> ((s: SparkSession, d: String) =>
-      Dedup.clusterSizeHistogram(s.read.parquet(
+      Dedup.clusterSizeHistogram(Tables.read(s,
         graft.operators.IndexStore.clusterPath(s, d)))),
     "t59_soft_dedup_weights" -> ((s: SparkSession, d: String) =>
       graft.operators.TrainingPrep.softDedupWeights(s, d,
-        s.read.parquet(graft.operators.IndexStore.clusterPath(s, d)))),
+        Tables.read(s, graft.operators.IndexStore.clusterPath(s, d)))),
     "t62_soft_dedup_budget" -> ((s: SparkSession, d: String) =>
       graft.operators.TrainingPrep.softDedupBudget(s, d,
-        s.read.parquet(graft.operators.IndexStore.clusterPath(s, d)))),
+        Tables.read(s, graft.operators.IndexStore.clusterPath(s, d)))),
     // t67: the mixture planner actually CONSUMING t62's effective
     // volumes — √-temperature rates over cluster-discounted supply,
     // same per-doc keep hash as t29
     "t67_soft_mixture_selection" -> ((s: SparkSession, d: String) =>
       graft.operators.TrainingPrep.softMixtureSelection(s, d,
-        s.read.parquet(graft.operators.IndexStore.clusterPath(s, d)))),
+        Tables.read(s, graft.operators.IndexStore.clusterPath(s, d)))),
     // t66s: t67 folded into the capstone — t65 selection → soft mixture
     // (effective-volume rates) → epochs over effective supply → shards
     "t66s_run_manifest_soft" -> ((s: SparkSession, d: String) =>
       graft.operators.TrainingPrep.runManifestSoft(s, d,
-        s.read.parquet(graft.operators.IndexStore.clusterPath(s, d)))),
+        Tables.read(s, graft.operators.IndexStore.clusterPath(s, d)))),
     // d18 rides the STORED 32-perm signatures: the 1-bit sketch estimate
     // graded against the exact verified Jaccard it approximates
     "d18_bbit_minhash_estimate" -> ((s: SparkSession, d: String) =>
@@ -550,7 +550,7 @@ object SparkEntry {
     // oracle applies verbatim)
     "d13_cluster_representatives" -> ((s: SparkSession, d: String) =>
       Dedup.clusterRepresentativesFrom(
-        s.read.parquet(graft.operators.IndexStore.clusterPath(s, d)),
+        Tables.read(s, graft.operators.IndexStore.clusterPath(s, d)),
         TextAnalysis.qualityScores(s, d).select(col("doc_id"), col("quality_e4")))),
     // URL-level dedup (C4/RefinedWeb stage 1): map-only canonicalization,
     // one exchange on the canonical key — the d1/d2 hash-groupBy shape

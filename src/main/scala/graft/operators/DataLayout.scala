@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Physical data-layout operators — the write-side half of scan
   * performance at 100 TB, where how bytes land on disk decides how many
   * of them every later query has to read.
@@ -175,7 +177,7 @@ object DataLayout {
       targetRecordsPerFile: Long): Unit = {
     require(targetRecordsPerFile > 0,
       s"targetRecordsPerFile must be positive, got $targetRecordsPerFile")
-    val in = spark.read.parquet(inPath)
+    val in = Tables.read(spark, inPath)
     val rows = in.count()
     val parts = math.min(Int.MaxValue.toLong,
       math.max(1L, (rows + targetRecordsPerFile - 1) / targetRecordsPerFile)).toInt

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.SimHash.simhash64
-import graft.sources.Fixtures.{table, tableParallel}
+import graft.sources.Tables.{table, tableParallel}
 
 /** Deduplication operators for a training-data pipeline over `documents`:
   * exact (hash group-by), n-gram Jaccard (shingle inverted index), MinHash
@@ -71,8 +71,9 @@ object Dedup {
     // tableParallel: the 9-gram explode + per-shingle md5 chain below is
     // the suite's heaviest scan-stage work, and the fixture is a
     // single-row-group file — unsplittable, so it otherwise runs in ONE
-    // task (r18 A/B: d4 2.98 → 2.11 s, d3 2.11 → 1.65 s with the scan
-    // parallelized; guide §2.5)
+    // task (guide §2.5). A/B against a plain read (sf0.1, 4 cores,
+    // tools.QueryProfile, medians of 10 warm runs): d4 2.69 → 2.23 s,
+    // d16 2.07 → 1.63 s, d18 1.40 → 1.32 s, d8 3.14 → 3.02 s
     shinglesOf(tableParallel(spark, dir, "documents"))
 
   /** Same shingling over an arbitrary (doc_id, text) frame — d9 runs it
@@ -535,7 +536,7 @@ object Dedup {
     */
   private def crossDocs(
       spark: SparkSession, dir: String, plantClones: Boolean): DataFrame = {
-    val docs = tableParallel(spark, dir, "documents").select(col("doc_id"), col("text"))
+    val docs = table(spark, dir, "documents").select(col("doc_id"), col("text"))
     if (!plantClones) docs
     else docs.unionAll(
       docs.filter(col("doc_id") % 100 === 50)
@@ -1173,9 +1174,13 @@ object Dedup {
   private[graft] def maybePartialCopies(
       spark: SparkSession, dir: String, plantCopies: Boolean): DataFrame = {
     // tableParallel only on the planted (graded d10/d11/d12/t24/t25) path,
-    // whose segment-md5 explode dominates its scan; the unplanted t20-leg
-    // consumers measured net-negative with the extra exchange (r18 A/B:
-    // t20 +0.35 s, t64 +0.39 s, t34 +0.43 s vs d12 −0.58 s, t25 −0.56 s)
+    // whose segment-md5 explode dominates its scan. A/B against a plain
+    // read (sf0.1, 4 cores, tools.QueryProfile, medians of 10 warm runs):
+    // d12 1.23 → 0.77 s, d11 1.91 → 1.50 s, t25 4.25 → 3.90 s, d10 0.32 →
+    // 0.28 s, t24 0.32 → 0.28 s. The unplanted path (the t20 selection
+    // legs) stays a plain read: r18's losses there (t20 +0.35 s, t64
+    // +0.39 s, t34 +0.43 s) were measured with the selection gate's own
+    // documents read repartitioned too, so they do not isolate this site
     val d = (if (plantCopies) tableParallel(spark, dir, "documents")
              else table(spark, dir, "documents"))
       .select(col("doc_id"), col("text"))

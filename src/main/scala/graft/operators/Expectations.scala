@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.table
+import graft.sources.Tables
+import graft.sources.Tables.table
 
 /** Declarative data-quality expectations — the validation gate a corpus
   * passes before anything trains on it (the unit-tests-for-data idea of
@@ -487,7 +488,7 @@ object Expectations {
           sum(TextAnalysis.nTokensCol(col("text"))).as("tokens"),
           sum(col("n_chars")).as("chars"))
           .coalesce(1).write.mode("overwrite").parquet(s"$outPath/state/batch_id=$id")
-        val agg = s.read.parquet(s"$outPath/state").agg(
+        val agg = Tables.read(s, s"$outPath/state").agg(
           coalesce(sum(col("docs")), lit(0L)).as("cur_docs"),
           coalesce(sum(col("tokens")), lit(0L)).as("cur_tokens"),
           countDistinct(col("lang")).as("cur_langs"),
@@ -533,7 +534,7 @@ object Expectations {
           .groupBy(col("label"), col("i"))
           .agg(sum(fx).as("psum"), count(lit(1)).as("pn"))
           .coalesce(1).write.mode("overwrite").parquet(s"$outPath/state/batch_id=$id")
-        val acc = s.read.parquet(s"$outPath/state")
+        val acc = Tables.read(s, s"$outPath/state")
           .groupBy(col("label"), col("i"))
           .agg(sum(col("psum")).as("cur_sum"), sum(col("pn")).as("cur_n"))
         val per = acc.join(prev, Seq("label", "i"), "left")

@@ -145,7 +145,7 @@ object IndexStore {
 
   /** The persisted IVF index path for `dir`, building it on first use.
     *
-    * Keyed on the embeddings SNAPSHOT (dir + mtime,
+    * Keyed on the embeddings SNAPSHOT (dir + stamp,
     * [[IvfAnn.snapshotKey]]), with the snapshot stamp in the on-disk
     * path: a regenerated embeddings table at the same dir rebuilds the
     * index instead of silently serving stale geometry — and because the
@@ -156,7 +156,7 @@ object IndexStore {
     * whose codebook/centroid caches are snapshot-keyed the same way.
     */
   def vectorPath(spark: SparkSession, dir: String): String = {
-    val snap = IvfAnn.snapshotKey(dir)
+    val snap = IvfAnn.snapshotKey(spark, dir)
     val key = s"ivf:$snap"
     evictStaleSnapshots(s"ivf:$dir@", key)
     built.computeIfAbsent(key, { _ =>
@@ -177,7 +177,7 @@ object IndexStore {
     */
   def vectorPqPath(spark: SparkSession, dir: String): String = {
     val base = vectorPath(spark, dir)
-    val key = s"ivfpq:${IvfAnn.snapshotKey(dir)}"
+    val key = s"ivfpq:${IvfAnn.snapshotKey(spark, dir)}"
     evictStaleSnapshots(s"ivfpq:$dir@", key)
     built.computeIfAbsent(key, { _ =>
       VectorIndex.pqBuild(spark, dir, base)

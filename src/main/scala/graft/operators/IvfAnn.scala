@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{cosFxF, fxL2ToF}
-import graft.sources.Fixtures.table
+import graft.sources.Tables
+import graft.sources.Tables.table
 
 /** IVF (inverted-file) ANN — the coarse-quantizer scale path next to the
   * LSH variant in [[Similarity]]:
@@ -87,34 +88,21 @@ object IvfAnn {
 
   // memoized per data snapshot: training is a pure function of the parquet,
   // and assignments/topk/both oracle generators all need the same centroids.
-  // The key includes the file mtime so a regenerated parquet at the same
-  // path (tests, long-lived drivers) retrains instead of silently reusing
-  // stale centroids.
+  // The key includes the embeddings' snapshot stamp so a regenerated parquet
+  // at the same path (tests, long-lived drivers) retrains instead of
+  // silently reusing stale centroids.
   private val centroidCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Float]]]
 
-  private[operators] def snapshotKey(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    val mtime =
-      try {
-        if (java.nio.file.Files.isDirectory(p)) {
-          val s = java.nio.file.Files.list(p)
-          try {
-            val it = s.iterator()
-            var m = java.nio.file.Files.getLastModifiedTime(p).toMillis
-            while (it.hasNext) {
-              val t = java.nio.file.Files.getLastModifiedTime(it.next()).toMillis
-              if (t > m) m = t
-            }
-            m
-          } finally s.close()
-        } else java.nio.file.Files.getLastModifiedTime(p).toMillis
-      } catch { case _: Exception => 0L }
-    s"$dir@$mtime"
-  }
+  /** `<dir>@<stamp>`: the embeddings table's [[Tables.stamp]] (file count,
+    * total length, latest mtime), the key of every per-snapshot memo of
+    * derived vector artifacts.
+    */
+  private[operators] def snapshotKey(spark: SparkSession, dir: String): String =
+    s"$dir@${Tables.stamp(spark, s"$dir/embeddings.parquet")}"
 
   private[operators] def centroidsFor(spark: SparkSession, dir: String): Array[Array[Float]] = {
-    val key = snapshotKey(dir)
+    val key = snapshotKey(spark, dir)
     centroidCache.getOrElseUpdate(key, {
       // evict superseded snapshots of the same dir: a long-lived driver
       // regenerating data repeatedly must not accumulate stale arrays
@@ -689,7 +677,7 @@ object IvfAnn {
       threshold: Double = SemDedupThreshold,
       plantClones: Boolean = false,
       cloneOffset: Long = Similarity.CloneIdOffset): DataFrame = {
-    val corpus = spark.read.parquet(s"$path/lists")
+    val corpus = Tables.read(spark, s"$path/lists", VectorIndex.storedListsSchema(spark, path))
       .select(col("vec_id"), col("embedding"), col("centroid").cast("int").as("centroid"))
     val assigned =
       if (!plantClones) corpus

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
-import graft.sources.Fixtures.{table, tableParallel}
+import graft.sources.Tables
+import graft.sources.Tables.{table, tableParallel}
 
 /** Statistical language-model scoring for training-data curation — the
   * CCNet/DSIR layer of an LLM data pipeline, over the `documents` table.
@@ -174,9 +175,9 @@ object LmScore {
     */
   def loadModel(spark: SparkSession, modelPath: String)
       : (DataFrame, DataFrame, DataFrame) = (
-    spark.read.parquet(s"$modelPath/model"),
-    spark.read.parquet(s"$modelPath/unk"),
-    spark.read.parquet(s"$modelPath/global").select(col("unk_global_e6")))
+    Tables.read(spark, s"$modelPath/model"),
+    Tables.read(spark, s"$modelPath/unk"),
+    Tables.read(spark, s"$modelPath/global").select(col("unk_global_e6")))
 
   /** Score against preloaded model frames — the per-batch body, with no
     * file reads of its own.
@@ -206,7 +207,7 @@ object LmScore {
     * a crash rewrites the same files instead of appending duplicates —
     * exactly-once output under Structured Streaming's at-least-once
     * replay, with no marker bookkeeping. Readers see `batch` as an
-    * ordinary partition column on `spark.read.parquet(outPath)`.
+    * ordinary partition column on a plain parquet read of `outPath`.
     */
   def scoreIngestStream(
       docs: DataFrame, modelPath: String, outPath: String,
@@ -477,7 +478,7 @@ object LmScore {
     * across scoring passes.
     */
   def dsirWeightsIndexed(spark: SparkSession, dir: String, path: String): DataFrame = {
-    val feats = spark.read.parquet(s"$path/feats")
+    val feats = Tables.read(spark, s"$path/feats")
     bigramOcc(tableParallel(spark, dir, "documents"))
       .filter(col("doc_id") >= DsirTargetCutoff)
       .withColumn("b",
@@ -915,9 +916,9 @@ object LmScore {
     */
   def loadNbModel(spark: SparkSession, modelPath: String)
       : (DataFrame, DataFrame, DataFrame) = (
-    spark.read.parquet(s"$modelPath/model"),
-    spark.read.parquet(s"$modelPath/unk"),
-    spark.read.parquet(s"$modelPath/prior"))
+    Tables.read(spark, s"$modelPath/model"),
+    Tables.read(spark, s"$modelPath/unk"),
+    Tables.read(spark, s"$modelPath/prior"))
 
   /** Classify arbitrary labeled docs (doc_id, lang, text) against a
     * persisted NB model. On the training corpus itself this is bit-equal

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.table
+import graft.sources.Tables.table
 
 /** MERGE INTO semantics as a composable operator — the snapshot-refresh
   * primitive every warehouse pipeline needs (Delta/Iceberg expose it as

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.table
+import graft.sources.Tables.table
 
 /** Product quantization (Jégou, Douze, Schmid 2011, public) — the
   * compression-side ANN path that completes the vector stack next to
@@ -58,7 +58,7 @@ object PqAnn {
 
   private[operators] def codebooksFor(
       spark: SparkSession, dir: String): Array[Array[Array[Float]]] = {
-    val key = IvfAnn.snapshotKey(dir)
+    val key = IvfAnn.snapshotKey(spark, dir)
     codebookCache.getOrElseUpdate(key, {
       codebookCache.keySet
         .filter(k => k != key && k.startsWith(s"$dir@"))
@@ -367,7 +367,7 @@ object PqAnn {
 
   private[operators] def resCodebooksFor(
       spark: SparkSession, dir: String): Array[Array[Array[Float]]] = {
-    val key = IvfAnn.snapshotKey(dir) + "#res"
+    val key = IvfAnn.snapshotKey(spark, dir) + "#res"
     resCodebookCache.getOrElseUpdate(key, {
       resCodebookCache.keySet
         .filter(k => k != key && k.startsWith(s"$dir@"))

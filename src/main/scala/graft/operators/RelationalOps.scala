@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.table
+import graft.sources.Tables.table
 
 /** General relational operator coverage on the TPC-H-ish tables: scan +
   * filter + aggregate, multi-way joins, windows, set ops, rollup, JSON
@@ -960,8 +960,8 @@ object RelationalOps {
       // no .distinct() prologue: collect_set dedupes per order, and the
       // partial (map-side) collect_set shuffles the same distinct pairs a
       // distinct would — dropping it removes one full corpus Exchange
-      // (r17, guide §2.4; plans/r17/g7_part_triangles_*.txt: 3 → 2
-      // exchanges before the pair explosion)
+      // (r17, guide §2.4: `tools.ExplainDump <sfDir> g7_part_triangles`
+      // shows 3 → 2 exchanges before the pair explosion)
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("docs"))
       .select(explode(expr(Dedup.OrderedPairsExpr)).as("p"))

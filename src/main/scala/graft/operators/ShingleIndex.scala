@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.table
+import graft.sources.Tables
+import graft.sources.Tables.table
 
 /** Materialized shingle/segment index for the dedup family.
   *
@@ -691,7 +692,7 @@ object ShingleIndex {
 
   /** Accumulated [[dedupIngestStream]] verdicts: (doc_id, kept, batch_id). */
   def decisions(spark: SparkSession, decisionsPath: String): DataFrame =
-    spark.read.parquet(decisionsPath)
+    Tables.read(spark, decisionsPath)
 
   /** The per-run marker directory [[ingestStream]] keys its replay guard
     * by: `markerRoot/run-<id>` where the id's lifetime is the

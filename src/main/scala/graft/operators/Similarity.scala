@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{cosFxF, cosineF, dotF}
-import graft.sources.Fixtures.table
+import graft.sources.Tables.table
 
 /** Similarity search over the `embeddings` table (array<float>, dim 64).
   *

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash
+import graft.sources.Tables
 
 /** Count-min sketch (Cormode & Muthukrishnan 2005, public) over the
   * [[PortableHash]] affine family — the PORTABLE sketch counterpart of
@@ -204,7 +205,7 @@ object Sketches {
   def sourceOverlapMatrix(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.KmvAgg
     val k = KmvAgg.DefaultK
-    val sh = graft.sources.Fixtures.table(spark, dir, "documents")
+    val sh = Tables.table(spark, dir, "documents")
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= OverlapShingle)
       .select(col("source"), explode(expr(
@@ -491,7 +492,7 @@ object Sketches {
           .exists(statePath)
         val accumulated =
           if (stateExists)
-            s.read.parquet(s"$outPath/state").filter(col("batch_id") < id)
+            Tables.read(s, s"$outPath/state").filter(col("batch_id") < id)
               .groupBy(col("w")).agg(expr("bit_or(bits)").as("bits"))
           else
             s.createDataFrame(

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.table
+import graft.sources.Tables.table
 
 /** Skew-resistant aggregation: the two-phase salted pattern for the 100 TB
   * case where a handful of hot keys (here: 3 return flags over the whole

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Fixtures.{table, tableParallel}
+import graft.sources.Tables.{table, tableParallel}
 
 /** Training-data preparation operators over `documents` — the steps between
   * raw corpus and tokenizer-ready shards:
@@ -553,7 +553,7 @@ object TrainingPrep {
   private def selectionGate(
       spark: SparkSession, dir: String, dup: DataFrame): DataFrame = {
     val w = Window.partitionBy(md5(col("text").cast("binary"))).orderBy(col("doc_id"))
-    tableParallel(spark, dir, "documents")
+    table(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)

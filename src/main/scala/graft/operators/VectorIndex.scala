@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Persisted IVF index for the ANN path — the vector counterpart of
   * [[ShingleIndex]]'s build-once discipline.
   *
@@ -86,7 +88,7 @@ object VectorIndex {
     * sidecar; falls back to inference for an index built before the
     * sidecar existed (and backfills it).
     */
-  private def storedListsSchema(
+  private[operators] def storedListsSchema(
       spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
     val p = schemaPath(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -100,7 +102,7 @@ object VectorIndex {
       org.apache.spark.sql.types.DataType.fromJson(bytes.toString("UTF-8"))
         .asInstanceOf[org.apache.spark.sql.types.StructType]
     } else {
-      val inferred = spark.read.parquet(s"$path/lists").schema
+      val inferred = Tables.schema(spark, s"$path/lists")
       writeSchemaSidecar(spark, path, inferred)
       inferred
     }
@@ -177,7 +179,7 @@ object VectorIndex {
     // sidecar schema, not inference: a [[trainOnly]] index's lists can be
     // file-less (nothing to infer from) when the first batch's crash
     // repair lands here
-    transform(spark.read.schema(storedListsSchema(spark, path)).parquet(lists.toString))
+    transform(Tables.read(spark, lists.toString, storedListsSchema(spark, path)))
       .repartition(col("centroid"))
       .write.mode("overwrite")
       .partitionBy("centroid")
@@ -208,7 +210,7 @@ object VectorIndex {
     */
   def delete(spark: SparkSession, path: String, ids: DataFrame): Unit = {
     val lists = s"$path/lists"
-    val stored = spark.read.schema(storedListsSchema(spark, path)).parquet(lists)
+    val stored = Tables.read(spark, lists, storedListsSchema(spark, path))
     val idSet = ids.select(col("vec_id")).distinct()
     val touched = stored.join(idSet, Seq("vec_id"), "left_semi")
       .select(col("centroid")).distinct().collect().map(_.get(0))
@@ -397,7 +399,7 @@ object VectorIndex {
     * (vec_id, centroid, kept, batch_id), one row per ingested vector.
     */
   def decisions(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/decisions")
+    Tables.read(spark, s"$path/decisions")
 
   /** The judge's seen-store read: only the `centroid=` directories the
     * batch touches, pruned at the directory level like the v7i probe
@@ -407,8 +409,7 @@ object VectorIndex {
     */
   private[graft] def dedupPrior(
       spark: SparkSession, path: String, touched: Seq[Int]): DataFrame =
-    spark.read.schema(storedListsSchema(spark, path))
-      .parquet(s"$path/lists")
+    Tables.read(spark, s"$path/lists", storedListsSchema(spark, path))
       .filter(col("centroid").isin(touched: _*))
       .select(col("vec_id"), col("embedding"), col("centroid").cast("int").as("centroid"))
 
@@ -423,7 +424,7 @@ object VectorIndex {
   /** The persisted fixed-point centroids, list-id order. */
   def centroidsFx(spark: SparkSession, path: String): Array[Array[Long]] = {
     import spark.implicits._
-    spark.read.parquet(s"$path/centroids")
+    Tables.read(spark, s"$path/centroids")
       .orderBy(col("c"))
       .as[(Int, Seq[Long])].collect()
       .map(_._2.toArray)
@@ -517,7 +518,7 @@ object VectorIndex {
   private[graft] def pqCodebooksFx(
       spark: SparkSession, path: String): Array[Array[Array[Long]]] = {
     import spark.implicits._
-    val rows = spark.read.parquet(s"$path/pq_codebooks")
+    val rows = Tables.read(spark, s"$path/pq_codebooks")
       .as[(Int, Int, Seq[Long])].collect()
     val m = rows.map(_._1).max + 1
     val ks = rows.map(_._2).max + 1
@@ -542,7 +543,7 @@ object VectorIndex {
       spark, dir, centroidsFx(spark, path), pqCodebooksFx(spark, path))
     val probed = rows.map(_._2).distinct
     PqAnn.rankResidualAdc(
-      spark.read.parquet(s"$path/pq_codes")
+      Tables.read(spark, s"$path/pq_codes")
         .filter(col("centroid").isin(probed: _*)),
       rows.toDF("qid", "centroid", "dt"))
   }
@@ -553,6 +554,6 @@ object VectorIndex {
     */
   private[graft] def prunedLists(
       spark: SparkSession, path: String, probed: Seq[Int]): DataFrame =
-    spark.read.parquet(s"$path/lists")
+    Tables.read(spark, s"$path/lists")
       .filter(col("centroid").isin(probed: _*))
 }

@@ -20,53 +20,15 @@ import org.apache.spark.sql.functions._
   * like the reference's one-instance-per-event granularity. The small
   * dimension tables (`nation`, `region`, distinct brands) stay tiny at any
   * sf — they are the broadcast side of every join.
+  *
+  * Every base table is read through [[Tables.table]]: its schema is
+  * inferred once per snapshot stamp (file count, total length, latest
+  * mtime) and later reads pass it in, so building a fixture frame runs no
+  * schema-inference job. Only the schema is remembered; every scan runs.
   */
 object Fixtures {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
-  /** Ceiling (compressed bytes) under which [[tableParallel]] follows the
-    * read with a round-robin repartition to core count, and the per-task
-    * floor that keeps tiny tables out of it. The graded parquet fixtures
-    * are SINGLE-ROW-GROUP files, so Spark's split machinery cannot
-    * parallelize their scans (a split only reads the row group whose
-    * midpoint it contains) — every scan-stage expression ran in ONE task
-    * regardless of core count (guide §2.5 "input skew: one huge
-    * unsplittable file → repartition immediately after the read";
-    * profiled r18: t23's documents-scan stages at 0.3-1.0 s each,
-    * tasks=1). Applied only at the proven CPU-heavy consumers (the
-    * shingle/md5 producers), NOT blanket at [[table]]: an r18 A/B of the
-    * blanket form lost suite-wide — the extra exchange+stage taxes every
-    * light scan more than parallelism pays back. The condition is on
-    * INPUT BYTES, so at production scale (many multi-row-group files,
-    * far above the ceiling) the branch is inert and no corpus pays the
-    * exchange; locally the shuffled bytes are ≤ the ceiling by
-    * construction. Env-overridable; 0 disables.
-    */
-  private val SmallInputCeiling: Long =
-    sys.env.getOrElse("SPARK_GRAFT_SMALL_INPUT_BYTES", (64L << 20).toString).toLong
-  private val SmallInputPerTask: Long = 16L << 10
-
-  private def inputBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(path))
-  }
-
-  /** [[table]], followed by a small-input repartition when the file is an
-    * unsplittable single-row-group fixture (see [[SmallInputCeiling]]).
-    * For consumers whose per-row scan-stage work dominates the scan.
-    */
-  def tableParallel(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
-    val bytes = inputBytes(path)
-    val cores = spark.sparkContext.defaultParallelism
-    val slices = math.min(cores.toLong, bytes / SmallInputPerTask).toInt
-    if (bytes < SmallInputCeiling && slices >= 2) df.repartition(slices) else df
-  }
+  import Tables.table
 
   private def okey = col("o_orderkey")
   private def inst = col("o_orderkey").cast("string").as("instance_id")

@@ -2,11 +2,13 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.ImporterPipeline._
+import graft.sources.Tables
 
 /** Streaming shell for the importer pipeline (SURVEY.md §2.6): the same
   * batch DAG applied per micro-batch under `foreachBatch`, with
@@ -33,6 +35,9 @@ object ImporterStream {
     val completed: String = s"$outDir/completed"
     val errors: String = s"$outDir/errors"
   }
+
+  /** The idempotency state `processed_instances`: one instance id per row. */
+  val ProcessedSchema: StructType = StructType(Seq(StructField("instance_id", StringType)))
 
   /** One micro-batch: validate → anti-join processed → pipeline → sinks.
     * Public so tests can drive a single batch synchronously.
@@ -66,15 +71,14 @@ object ImporterStream {
     val valid = validEvents(batch)
     val dead = deadLetters(batch)
 
+    // the state's schema is fixed by its one writer below, so the read
+    // passes it: no per-batch schema-inference job over a table whose
+    // stamp changes every batch
     val existing =
       if (Files.exists(Paths.get(sinks.processed)))
-        spark.read.parquet(sinks.processed)
+        Tables.read(spark, sinks.processed, ProcessedSchema)
       else
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(
-              "instance_id", org.apache.spark.sql.types.StringType))))
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ProcessedSchema)
 
     val newInst = newInstanceEvents(valid, existing)
     // cache: newInst feeds three sinks; without it the anti-join against

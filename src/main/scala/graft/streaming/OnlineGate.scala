@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
 import graft.operators.{Dedup, IvfAnn, ShingleIndex, TextAnalysis, TrainingPrep, VectorIndex}
+import graft.sources.Tables
 
 /** The ONLINE training-selection gate — the streaming composition of the
   * signals a pretraining pipeline runs per document, judged AT ARRIVAL
@@ -116,9 +117,9 @@ object OnlineGate {
         VectorIndex.dedupIngestBatch(
           spark, b.drop("text").withColumnRenamed("doc_id", "vec_id"),
           vecPath, id, vecNs, centsFx, semThreshold)
-        val fuzzy = spark.read.parquet(s"$outPath/fuzzy/batch_id=$id")
+        val fuzzy = Tables.read(spark, s"$outPath/fuzzy/batch_id=$id")
           .select(col("doc_id"), col("kept").as("fuzzy_keep"))
-        val sem = spark.read.parquet(s"$vecPath/decisions/batch_id=$id")
+        val sem = Tables.read(spark, s"$vecPath/decisions/batch_id=$id")
           .select(col("vec_id").as("doc_id"), col("kept").as("sem_keep"))
         // optional CCNet leg: bucket against the FROZEN reference model
         // (persisted once before the stream started) — a pure per-doc
@@ -211,7 +212,7 @@ object OnlineGate {
 
   /** Accumulated composite verdicts: one row per ingested document. */
   def decisions(spark: SparkSession, outPath: String): DataFrame =
-    spark.read.parquet(s"$outPath/decisions")
+    Tables.read(spark, s"$outPath/decisions")
 
   /** Cut-time selection — the batch pass a pipeline runs when it freezes
     * a training snapshot: the accumulated online verdicts, further gated
@@ -953,7 +954,7 @@ object OnlineGate {
       maxDupFracE4: Long = TrainingPrep.MaxDupFracE4): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("v").desc)
-    spark.read.parquet(s"$statePath/log")
+    Tables.read(spark, s"$statePath/log")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .drop("rn", "v")
@@ -970,7 +971,7 @@ object OnlineGate {
       spark: SparkSession, statePath: String, intoVersion: Long): Unit = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("v").desc)
-    val merged = spark.read.parquet(s"$statePath/log")
+    val merged = Tables.read(spark, s"$statePath/log")
       .filter(col("v") <= intoVersion)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
@@ -1159,7 +1160,7 @@ private[streaming] object FirstSeen {
     val candidates =
       if (!exists(spark, bloomRoot)) idents.limit(0)
       else {
-        val acc = spark.read.parquet(bloomRoot).filter(col("batch_id") < id)
+        val acc = Tables.read(spark, bloomRoot).filter(col("batch_id") < id)
           .groupBy(col("w")).agg(expr("bit_or(bits)").as("bits"))
         Sketches.bloomPositions(idents, "ident")
           .join(broadcast(acc), Seq("w"), "left")
@@ -1176,7 +1177,7 @@ private[streaming] object FirstSeen {
     // exact confirm, bucket-pruned to the candidates — bloom FPs die here
     val seenBefore =
       if (candBuckets.isEmpty) idents.limit(0)
-      else spark.read.parquet(seenRoot)
+      else Tables.read(spark, seenRoot)
         .filter(col("batch_id") < id && col("bucket").isin(candBuckets: _*))
         .join(broadcast(candidates), Seq("ident"), "left_semi")
         .select(col("ident")).distinct()
@@ -1205,7 +1206,7 @@ private[streaming] object FirstSeen {
       .withColumn("bucket", pmod(hash(col("ident")), lit(OnlineGate.SeenBuckets)))
     val seenOut =
       if (compacting && exists(spark, seenRoot))
-        spark.read.parquet(seenRoot).filter(col("batch_id") <= id)
+        Tables.read(spark, seenRoot).filter(col("batch_id") <= id)
           .select(col("ident"), col("bucket"))
           .unionByName(newSeen).distinct()
           .localCheckpoint() // materialize BEFORE overwriting a source dir
@@ -1216,7 +1217,7 @@ private[streaming] object FirstSeen {
       .groupBy(col("w")).agg(expr("bit_or(mask)").as("bits"))
     val bloomOut =
       if (compacting && exists(spark, bloomRoot))
-        spark.read.parquet(bloomRoot).filter(col("batch_id") <= id)
+        Tables.read(spark, bloomRoot).filter(col("batch_id") <= id)
           .select(col("w"), col("bits"))
           .unionByName(newBloom)
           .groupBy(col("w")).agg(expr("bit_or(bits)").as("bits"))
@@ -1294,7 +1295,7 @@ object MediaGate {
 
   /** Accumulated at-arrival verdicts: one row per ingested asset. */
   def decisions(spark: SparkSession, outPath: String): DataFrame =
-    spark.read.parquet(s"$outPath/decisions")
+    Tables.read(spark, s"$outPath/decisions")
 
   /** The cold twin: the same verdicts from one batch pass over the full
     * corpus in arrival (doc_id) order — first_seen is the min-doc_id

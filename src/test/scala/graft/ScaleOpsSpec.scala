@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.{DataLayout, Dedup, MergeOps, SkewOps}
-import graft.sources.Fixtures.table
+import graft.sources.Tables.table
 
 /** Scale tools: salted aggregation, shingle doc-frequency cap, and
   * event-time windowed streaming aggregation with a watermark.
